@@ -5,15 +5,21 @@ in-memory adjacency dict, collecting names root->leaf, with a
 visited-set cycle guard and 'Undefined' for unknown names
 (main.py:1487-1506).
 
-Spark spelling — two interchangeable strategies:
+Spark spelling — three strategies, all producing the same paths:
 
-* ``build_category_paths`` (default): a bounded driver loop of
-  **broadcast self-joins to fixpoint**. The category dimension is tiny
-  relative to the fact table (thousands of nodes vs billions of rows),
-  so each iteration is a broadcast hash join with no shuffle; the loop
-  runs depth times (trees are shallow). This is the 100 TB-safe path:
-  the expensive fact table is only touched once, by a final broadcast
-  join against the materialized (id, category_path) dimension.
+* ``build_category_paths`` at or below ``driver_threshold`` rows
+  (default 100k): a **driver walk**. The dimension is collected once
+  and walked in Python by the same adjacency loop the reference runs;
+  a per-iteration Spark job would cost more in scheduling than the
+  whole computation on a table that small.
+* ``build_category_paths`` above ``driver_threshold``: a bounded driver
+  loop of **broadcast self-joins to fixpoint**. The category dimension
+  is tiny relative to the fact table (thousands of nodes vs billions
+  of rows), so each iteration is a broadcast hash join with no
+  shuffle; the loop runs depth times (trees are shallow). This is the
+  100 TB-safe path: the expensive fact table is only touched once, by
+  a final broadcast join against the materialized (id, category_path)
+  dimension.
 * ``build_category_paths_sql``: Spark 4.x native ``WITH RECURSIVE`` —
   same result, one SQL statement; kept as the declarative alternative
   (and it is exactly the DuckDB oracle spelling).

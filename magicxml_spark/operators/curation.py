@@ -1268,53 +1268,14 @@ def ngram_surprisal(
         # the unigram table feeds the total-count denominator; floors
         # apply to higher-order tables only (matches write_lm_snapshot)
         raise ValueError(f"floor_from must be >= 2: {floor_from}")
-    prevs = [f"prev{j}" for j in range(1, order)]  # prev1 = w[i-1], ...
-    toks = (
-        df.select(
-            F.col(id_col).alias("_id"), tokens(F.col(text_col)).alias("_w")
-        )
-        .filter(F.size("_w") > 0)
-        # pre-explode repartition: the tuple explode below otherwise
-        # runs at the scan's split count (see _lm_positions); the
-        # shuffled payload is the compact (id, tokens) frame
-        .repartition(df.sparkSession.sparkContext.defaultParallelism)
-    )
-
-    def tuple_at(i: Column) -> Column:
-        fields = [
-            # element_at(_, 0) RAISES — lazy CASE guards for i <= j
-            F.when(i > j, F.element_at("_w", i - j)).alias(f"prev{j}")
-            for j in range(1, order)
-        ]
-        return F.struct(
-            *fields,
-            F.element_at("_w", i).alias("cur"),
-            F.least(i, F.lit(order)).alias("pos"),
-        )
-
     # the position stream feeds order+1 consumers (each count table +
-    # the scoring join) and Catalyst recomputes the tokenize/explode
-    # subtree per consumer — materialize it ONCE (localCheckpoint,
-    # NOT persist: CacheManager matches by plan and would silently
-    # turn repeated identical queries into cache hits). The
-    # materialized stream is one row per corpus token — the same
-    # order of bytes any shuffle of it would spill; executor-loss
-    # recompute is the documented localCheckpoint trade.
-    pos = (
-        toks.select(
-            "_id",
-            F.explode(
-                F.transform(F.sequence(F.lit(1), F.size("_w")), tuple_at)
-            ).alias("_p"),
-        )
-        .select("_id", *[f"_p.{c}" for c in prevs], "_p.cur", "_p.pos")
-        .localCheckpoint(eager=True)
-    )
+    # the scoring join): materialized once
+    pos = _lm_positions(df, id_col, text_col, order, materialize=True)
 
     # count table per order: keys_k = (prev_{k-1}..prev_1, cur)
     tables = {1: pos.groupBy("cur").agg(F.count(F.lit(1)).alias("_c1"))}
     for k in range(2, order + 1):
-        keys = [f"prev{j}" for j in range(k - 1, 0, -1)] + ["cur"]
+        keys = _lm_table_keys(k)
         t = (
             pos.filter(F.col("pos") >= k)
             .groupBy(*keys)
@@ -1339,7 +1300,7 @@ def ngram_surprisal(
     # without a matched context count.
     joined = pos.join(tables[1], "cur").crossJoin(F.broadcast(tot))
     for k in range(2, order + 1):
-        keys = [f"prev{j}" for j in range(k - 1, 0, -1)] + ["cur"]
+        keys = _lm_table_keys(k)
         ctx = tables[k - 1].select(
             *[
                 F.col(f"prev{j}").alias(f"prev{j + 1}")
@@ -1469,10 +1430,13 @@ def write_lm_snapshot(
     concurrently — independent jobs); snapshot size is the distinct
     n-gram count (after pruning for JM, which the floor is the knob
     for). ``durable_derive=True`` (KN only) trades the single-wave
-    write shape for the write-then-read pattern so the derived
-    c{k}/scal jobs read durable t{k} parquet instead of executor-local
-    checkpoint blocks — the preemptible-cluster arm (ADVICE r12; see
-    :func:`_write_kn_snapshot`)."""
+    write shape for the write-then-read pattern so the derived c{k}
+    tables and scal's count-of-counts read durable t{k} parquet
+    instead of executor-local checkpoint blocks — the
+    preemptible-cluster arm (ADVICE r12; see
+    :func:`_write_kn_snapshot`). Protection is partial: scal's
+    vocab/token counts and the ``n_total`` count still read the
+    executor-local position stream."""
     import os
 
     if order < 2:
@@ -1674,10 +1638,13 @@ def _write_kn_snapshot(
     snapshot build (ADVICE r12). ``durable_derive=True`` opts into the
     write-then-read pattern for very long-running builds on
     preemptible clusters: the t{k} parquet writes land FIRST and the
-    c{k}/scal derivation reads the already-durable files back, so an
-    executor loss after the t-wave only re-runs the in-flight derived
-    job (the cost is the re-added read-back barrier plus one extra
-    pass over the top-order table)."""
+    c{k} aggregates and scal's count-of-counts read the already-durable
+    files back (the cost is the re-added read-back barrier plus one
+    extra pass over the top-order table). The protection is partial:
+    scal's ``_V``/``_n_tokens`` aggregate and the ``n_total`` count
+    still read the executor-local position-stream checkpoint, so an
+    executor loss after the t-wave can still fail the build at those
+    jobs."""
     import os
     from concurrent.futures import ThreadPoolExecutor
 
@@ -1710,9 +1677,8 @@ def _write_kn_snapshot(
     if durable_derive:
         # preemptible-cluster arm: land the t{k} parquet first (one
         # concurrent wave from the checkpoints), then re-point every
-        # derived aggregate at the DURABLE files — from here on an
-        # executor loss can only cost the in-flight derived job, never
-        # the adjusted tables themselves
+        # adjusted-table aggregate at the DURABLE files (the
+        # position-stream jobs below still read the checkpoint)
         def _write_t(item: tuple[int, DataFrame]) -> None:
             k, df_k = item
             df_k.write.mode("overwrite").parquet(

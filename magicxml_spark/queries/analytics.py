@@ -31,7 +31,7 @@ from magicxml_spark.operators.similarity import (
     embedding_near_dup_blocked,
 )
 from magicxml_spark.operators.text import LANG_MARKERS, text_profile
-from magicxml_spark.queries import query
+from magicxml_spark.queries import ORACLE, query
 from magicxml_spark.tables import table
 
 _WORDS_SQL = "list_filter(string_split_regex(lower(text), '\\s+'), x -> x <> '')"
@@ -51,18 +51,28 @@ def q_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- MinHash + LSH candidate pairs ------------------------------------------
+def _minhash_sig_ctes(src: str, prefix: str = "") -> str:
+    """The ``{prefix}w``/``{prefix}sh``/``{prefix}sig`` CTEs: per
+    (doc_id, band) the min md5 slice over the word 3-shingles of
+    ``src``'s text, 4 bands — lsh_candidate_pairs(n_bands=4,
+    shingle_k=3)'s signature convention, shared by every MinHash
+    oracle."""
+    return f"""
+    {prefix}w AS (SELECT doc_id, {_WORDS_SQL} AS w FROM {src}),
+    {prefix}sh AS (SELECT doc_id,
+                  list_transform(range(1, greatest(len(w) - 2, 1) + 1),
+                                 i -> array_to_string(w[i:i+2], ' ')) AS sh
+           FROM {prefix}w WHERE len(w) > 0),
+    {prefix}sig AS (SELECT doc_id, b.band,
+                   list_aggregate(list_transform(sh, s -> substr(md5(s), 1 + b.band * 8, 8)),
+                                  'min') AS signature
+            FROM {prefix}sh, (SELECT unnest(range(0, 4)) AS band) b)"""
+
+
 @query(
     "q_minhash_lsh_pairs",
     oracle=f"""
-    WITH w AS (SELECT doc_id, {_WORDS_SQL} AS w FROM documents),
-    sh AS (SELECT doc_id,
-                  list_transform(range(1, greatest(len(w) - 2, 1) + 1),
-                                 i -> array_to_string(w[i:i+2], ' ')) AS sh
-           FROM w WHERE len(w) > 0),
-    sig AS (SELECT doc_id, b.band,
-                   list_aggregate(list_transform(sh, s -> substr(md5(s), 1 + b.band * 8, 8)),
-                                  'min') AS signature
-            FROM sh, (SELECT unnest(range(0, 4)) AS band) b)
+    WITH {_minhash_sig_ctes("documents")}
     SELECT DISTINCT a.doc_id AS id_a, b2.doc_id AS id_b
     FROM sig a JOIN sig b2
       ON a.band = b2.band AND a.signature = b2.signature AND a.doc_id < b2.doc_id
@@ -94,15 +104,7 @@ _LSH_SIG_BOILER_SQL = f"""
     d AS (SELECT doc_id,
                  CASE WHEN doc_id % 25 = 0 THEN '{_BOILER}' ELSE text END AS text
           FROM documents),
-    w AS (SELECT doc_id, {_WORDS_SQL} AS w FROM d),
-    sh AS (SELECT doc_id,
-                  list_transform(range(1, greatest(len(w) - 2, 1) + 1),
-                                 i -> array_to_string(w[i:i+2], ' ')) AS sh
-           FROM w WHERE len(w) > 0),
-    sig AS (SELECT doc_id, b.band,
-                   list_aggregate(list_transform(sh, s -> substr(md5(s), 1 + b.band * 8, 8)),
-                                  'min') AS signature
-            FROM sh, (SELECT unnest(range(0, 4)) AS band) b)
+    {_minhash_sig_ctes("d")}
 """
 
 
@@ -1061,23 +1063,7 @@ def q_cosine_topk_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 # backend and hash-match the exact answer — proving the facade wiring
 # (count -> choose_ann_strategy -> backend) end-to-end. The dispatch
 # boundaries themselves are unit-tested in test_similarity.
-@query(
-    "q_cosine_topk_auto",
-    oracle="""
-    WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-    pairs AS (
-      SELECT a.vec_id AS vec_id, b.vec_id AS neighbor_id,
-             list_inner_product(a.v, b.v)
-               / (sqrt(list_inner_product(a.v, a.v)) * sqrt(list_inner_product(b.v, b.v)))
-               AS sim
-      FROM v a JOIN v b ON a.vec_id <> b.vec_id)
-    SELECT vec_id, neighbor_id, rank, round(sim, 4) AS sim
-    FROM (SELECT *, CAST(row_number() OVER (PARTITION BY vec_id
-                                            ORDER BY sim DESC, neighbor_id) AS INTEGER) AS rank
-          FROM pairs)
-    WHERE rank <= 5
-    """,
-)
+@query("q_cosine_topk_auto", oracle=ORACLE["q_cosine_topk"])
 def q_cosine_topk_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
     from magicxml_spark.operators.similarity import cosine_topk
 
@@ -1498,10 +1484,7 @@ def q_bm25_per_query(spark: SparkSession, sf_dir: str) -> DataFrame:
 # touching corpus text. The oracle is q_bm25_topk's SQL verbatim:
 # the index algebra must be indistinguishable from direct computation
 # (the same lifecycle-parity trick as q_stream_lm_score).
-from magicxml_spark.queries import ORACLE as _ORACLE  # noqa: E402
-
-
-@query("q_bm25_index_query", oracle=_ORACLE["q_bm25_topk"])
+@query("q_bm25_index_query", oracle=ORACLE["q_bm25_topk"])
 def q_bm25_index_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     from magicxml_spark.operators.retrieval import (
         query_bm25_index,
@@ -1517,7 +1500,7 @@ def q_bm25_index_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query("q_bm25_index_probe", oracle=_ORACLE["q_bm25_topk"])
+@query("q_bm25_index_probe", oracle=ORACLE["q_bm25_topk"])
 def q_bm25_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Probe-only twin of q_bm25_index_query (the write-penalty
     ledger's steady-state arm): the inverted index builds once per

@@ -11,8 +11,8 @@ from pyspark.sql import functions as F
 from magicxml_spark.analytics.clusters import dedup_clusters
 from magicxml_spark.analytics.ml import pca_project, tfidf_vectors
 from magicxml_spark.operators.dedup import lsh_candidate_pairs
-from magicxml_spark.queries import query
-from magicxml_spark.queries.analytics import _WORDS_SQL
+from magicxml_spark.queries import ORACLE, query
+from magicxml_spark.queries.analytics import _WORDS_SQL, _minhash_sig_ctes
 from magicxml_spark.streaming.events import run_stream_to_memory
 from magicxml_spark.tables import table
 
@@ -21,15 +21,7 @@ from magicxml_spark.tables import table
 # The stream is driven to completion with availableNow + memory sink —
 # deterministic, so the BATCH SQL is a valid oracle for the STREAMING
 # result (same logical plan, same answer).
-@query(
-    "q_events_stream_windowed",
-    oracle="""
-    SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS window_start,
-           event_type, count(*) AS n_events, round(sum(value), 2) AS total_value
-    FROM events
-    GROUP BY 1, 2
-    """,
-)
+@query("q_events_stream_windowed", oracle=ORACLE["q_events_windowed"])
 def q_events_stream_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_stream_to_memory(spark, sf_dir)
 
@@ -218,15 +210,7 @@ def q_events_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_stream_minhash_pairs",
     oracle=f"""
-    WITH w AS (SELECT doc_id, {_WORDS_SQL} AS w FROM documents),
-    sh AS (SELECT doc_id,
-                  list_transform(range(1, greatest(len(w) - 2, 1) + 1),
-                                 i -> array_to_string(w[i:i+2], ' ')) AS sh
-           FROM w WHERE len(w) > 0),
-    sig AS (SELECT doc_id, b.band,
-                   list_aggregate(list_transform(sh, s -> substr(md5(s), 1 + b.band * 8, 8)),
-                                  'min') AS signature
-            FROM sh, (SELECT unnest(range(0, 4)) AS band) b)
+    WITH {_minhash_sig_ctes("documents")}
     SELECT a.doc_id AS id_a, b2.doc_id AS id_b
     FROM sig a JOIN sig b2
       ON a.band = b2.band AND a.signature = b2.signature AND a.doc_id < b2.doc_id
@@ -267,15 +251,7 @@ def q_stream_winnow_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_dedup_clusters",
     oracle=f"""
-    WITH RECURSIVE w AS (SELECT doc_id, {_WORDS_SQL} AS w FROM documents),
-    sh AS (SELECT doc_id,
-                  list_transform(range(1, greatest(len(w) - 2, 1) + 1),
-                                 i -> array_to_string(w[i:i+2], ' ')) AS sh
-           FROM w WHERE len(w) > 0),
-    sig AS (SELECT doc_id, b.band,
-                   list_aggregate(list_transform(sh, s -> substr(md5(s), 1 + b.band * 8, 8)),
-                                  'min') AS signature
-            FROM sh, (SELECT unnest(range(0, 4)) AS band) b),
+    WITH RECURSIVE {_minhash_sig_ctes("documents")},
     pairs AS (SELECT DISTINCT a.doc_id AS id_a, b2.doc_id AS id_b
               FROM sig a JOIN sig b2
                 ON a.band = b2.band AND a.signature = b2.signature
@@ -563,27 +539,9 @@ def q_cosine_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Spark's session_window extends a session while the next event starts
 # strictly before last_ts + gap, i.e. a new session begins when the
 # inter-event gap is >= the window gap — the oracle mirrors that
-# boundary exactly (>= 1800, vs q_sessionize's manual > 1800).
-@query(
-    "q_session_window",
-    oracle="""
-    WITH marked AS (
-      SELECT user_id, ts, event_id,
-             CASE WHEN lag(ts) OVER w IS NULL
-                       OR epoch(ts) - epoch(lag(ts) OVER w) >= 1800
-                  THEN 1 ELSE 0 END AS new_sess
-      FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-    sess AS (
-      SELECT user_id, ts,
-             sum(new_sess) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                                 ROWS UNBOUNDED PRECEDING) AS session_no
-      FROM marked)
-    SELECT user_id,
-           strftime(min(ts), '%Y-%m-%d %H:%M:%S') AS session_start,
-           count(*) AS n_events
-    FROM sess GROUP BY user_id, session_no
-    """,
-)
+# boundary exactly (>= 1800, vs q_sessionize's manual > 1800). The
+# streaming twin answers the same question, so they share one oracle.
+@query("q_session_window", oracle=ORACLE["q_events_stream_sessionize"])
 def q_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = table(spark, sf_dir, "events")
     return (

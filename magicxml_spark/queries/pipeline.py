@@ -12,6 +12,8 @@ engines) so the regex semantics are exercised on non-trivial counts.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -20,8 +22,8 @@ from magicxml_spark.operators.dedup import contamination_check
 from magicxml_spark.operators.sampling import hash_split, stratified_sample
 from magicxml_spark.operators.text import pii_counts, redact_pii, repetition_profile
 from magicxml_spark.plans.gating import gate_on_computed
-from magicxml_spark.queries import query
-from magicxml_spark.queries.analytics import _WORDS_SQL
+from magicxml_spark.queries import ORACLE, query
+from magicxml_spark.queries.analytics import _WORDS_SQL, _minhash_sig_ctes
 from magicxml_spark.tables import table
 
 
@@ -574,14 +576,7 @@ def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH d AS (SELECT doc_id,
                       md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))) AS fp
                FROM documents),
-    w AS (SELECT doc_id, {_WORDS_SQL} AS w FROM documents),
-    sh AS (SELECT doc_id, list_transform(range(1, greatest(len(w) - 2, 1) + 1),
-                                         i -> array_to_string(w[i:i+2], ' ')) AS sh
-           FROM w WHERE len(w) > 0),
-    sig AS (SELECT doc_id, b.band,
-                   list_aggregate(list_transform(sh, s -> substr(md5(s), 1 + b.band * 8, 8)),
-                                  'min') AS signature
-            FROM sh, (SELECT unnest(range(0, 4)) AS band) b),
+    {_minhash_sig_ctes("documents")},
     prior_fp AS (SELECT DISTINCT fp FROM d WHERE doc_id % 10 < 8),
     prior_sig AS (SELECT DISTINCT band, signature FROM sig WHERE doc_id % 10 < 8),
     ranked AS (SELECT doc_id, fp,
@@ -1120,39 +1115,7 @@ def q_ivf_refit_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
 # prior corpus's snapshot to parquet, then classify the delta AGAINST
 # THE FILES — proving write_dedup_snapshot + the snapshot reader
 # hash-match the inline derivation end-to-end.
-@query(
-    "q_snapshot_dedup",
-    oracle=f"""
-    WITH d AS (SELECT doc_id,
-                      md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))) AS fp
-               FROM documents),
-    w AS (SELECT doc_id, {_WORDS_SQL} AS w FROM documents),
-    sh AS (SELECT doc_id, list_transform(range(1, greatest(len(w) - 2, 1) + 1),
-                                         i -> array_to_string(w[i:i+2], ' ')) AS sh
-           FROM w WHERE len(w) > 0),
-    sig AS (SELECT doc_id, b.band,
-                   list_aggregate(list_transform(sh, s -> substr(md5(s), 1 + b.band * 8, 8)),
-                                  'min') AS signature
-            FROM sh, (SELECT unnest(range(0, 4)) AS band) b),
-    prior_fp AS (SELECT DISTINCT fp FROM d WHERE doc_id % 10 < 8),
-    prior_sig AS (SELECT DISTINCT band, signature FROM sig WHERE doc_id % 10 < 8),
-    ranked AS (SELECT doc_id, fp,
-                      row_number() OVER (PARTITION BY fp ORDER BY doc_id) AS rn
-               FROM d WHERE doc_id % 10 >= 8),
-    near AS (SELECT DISTINCT s.doc_id FROM sig s
-             JOIN prior_sig p USING (band, signature)
-             WHERE s.doc_id % 10 >= 8)
-    SELECT r.doc_id,
-           CAST(CASE WHEN pf.fp IS NOT NULL THEN 1 ELSE 0 END AS INTEGER) AS exact_dup_prior,
-           CAST(CASE WHEN n.doc_id IS NOT NULL THEN 1 ELSE 0 END AS INTEGER) AS near_dup_prior,
-           CAST(CASE WHEN r.rn > 1 THEN 1 ELSE 0 END AS INTEGER) AS exact_dup_batch,
-           CAST(CASE WHEN pf.fp IS NULL AND n.doc_id IS NULL AND r.rn = 1
-                THEN 1 ELSE 0 END AS INTEGER) AS keep
-    FROM ranked r
-    LEFT JOIN prior_fp pf ON r.fp = pf.fp
-    LEFT JOIN near n ON r.doc_id = n.doc_id
-    """,
-)
+@query("q_snapshot_dedup", oracle=ORACLE["q_incremental_dedup"])
 def q_snapshot_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from magicxml_spark.operators.dedup import (
         incremental_dedup_against_snapshot,
@@ -2462,18 +2425,29 @@ def _curation_v3_oracle() -> str:
     """
 
 
+def _quality_gate(
+    df: DataFrame, quality: Callable[[DataFrame], DataFrame]
+) -> DataFrame:
+    """The rows of ``df`` whose ``quality(df)`` keep flag is set: the
+    Gopher/FineWeb gate of every curation composition. The compact
+    (doc_id, keep) frame materializes before its filter
+    (gate_on_computed — the r11 gate-shape rule; probe 40-48 -> 28-29 s
+    for the gopher+fineweb pair at sf1) and the surviving ids join
+    back to ``df``."""
+    return df.join(
+        gate_on_computed(
+            quality(df), ["doc_id", "keep"], F.col("keep")
+        ).select("doc_id"),
+        "doc_id",
+    )
+
+
 @query("q_curation_v3", oracle=_curation_v3_oracle())
 def q_curation_v3(spark: SparkSession, sf_dir: str) -> DataFrame:
     from magicxml_spark.operators.curation import gopher_quality, perplexity_buckets
     from magicxml_spark.operators.sampling import pack_shards, seeded_shuffle
 
-    docs = table(spark, sf_dir, "documents")
-    # keep frame materializes before the filter (the r11 gate-shape
-    # rule, r12's gate_on_computed API — see BASELINE r11)
-    keep3 = gate_on_computed(
-        gopher_quality(docs), ["doc_id", "keep"], F.col("keep")
-    ).select("doc_id")
-    kept = docs.join(keep3, "doc_id")
+    kept = _quality_gate(table(spark, sf_dir, "documents"), gopher_quality)
     buckets = perplexity_buckets(kept)
     sel = buckets.filter(F.col("bucket") <= 2).select("doc_id", "n_tokens")
     shuffled = seeded_shuffle(sel, "doc_id", 42)
@@ -2815,7 +2789,7 @@ def _dsir_select_ctes(src: str) -> str:
     """The DSIR importance-weight + Gumbel-key chain (target = even
     doc_ids, hash_chars=3, alpha=0.5) reading (doc_id, text) from
     ``src``; ends in ``dsir_keyed`` (doc_id, n_grams, lw, sel).
-    Shared by q_curation_v4 and the v5 composition."""
+    Shared by q_curation_v4 and :func:`_dsir_pack_sql`."""
     return f"""
     dsw AS (SELECT doc_id, {_WORDS_SQL} AS w FROM {src}),
     dsg AS (SELECT doc_id, doc_id % 2 = 0 AS is_t,
@@ -2844,6 +2818,73 @@ def _dsir_select_ctes(src: str) -> str:
                                   AS BIGINT) + 0.5) / 4294967296.0)) * 1e6, 0)
                                 AS BIGINT) AS sel
                FROM dsfilled)"""
+
+
+def _dsir_pack_sql(src: str) -> str:
+    """The compositions' selection tail over ``src`` (doc_id, text):
+    DSIR top-100 (the _dsir_select_ctes chain), token counts, the
+    128-token pack_sequences segments, and the final 9-column SELECT.
+    Shared by the v5, v6 and v8 oracles; the Spark twin is
+    :func:`_dsir_pack_stage`."""
+    tok_n = (
+        "len(list_filter(string_split_regex(lower(text), '\\s+'),"
+        " x -> x <> ''))"
+    )
+    return f"""
+    {_dsir_select_ctes(src)},
+    sel AS MATERIALIZED (SELECT doc_id, n_grams, lw, sel FROM dsir_keyed
+            ORDER BY sel DESC, doc_id LIMIT 100),
+    pw AS (SELECT s.doc_id, s.n_grams, s.lw, s.sel,
+                  CAST({tok_n} AS BIGINT) AS n
+           FROM sel s JOIN {src} c USING (doc_id)),
+    pnz AS (SELECT * FROM pw WHERE n > 0),
+    ppre AS (SELECT doc_id, n_grams, lw, sel, n,
+                    CAST(coalesce(sum(n) OVER (ORDER BY doc_id
+                           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
+                         0) AS BIGINT) AS p
+             FROM pnz),
+    pseg AS (SELECT doc_id, n_grams, lw, sel, n, p,
+                    unnest(range(p // 128, (p + n - 1) // 128 + 1)) AS seq_id
+             FROM ppre)
+    SELECT doc_id, n_grams,
+           round(lw / 1e6, 6) AS log_w,
+           round(sel / 1e6, 6) AS sel_key,
+           n AS n_tokens, seq_id,
+           greatest(seq_id * 128 - p, 0) AS doc_from,
+           least(n, (seq_id + 1) * 128 - p)
+             - greatest(seq_id * 128 - p, 0) AS seg_len,
+           greatest(p - seq_id * 128, 0) AS seq_off
+    FROM pseg"""
+
+
+def _dsir_pack_stage(df: DataFrame) -> DataFrame:
+    """Spark twin of :func:`_dsir_pack_sql`: DSIR top-100 toward the
+    even-id target, then token-exact 128-token packing of the
+    selection. ``df`` (doc_id, text) feeds three consumers (DSIR
+    grams, DSIR id frame, token counts), so callers pass it
+    materialized."""
+    from magicxml_spark.operators.dsir import dsir_select
+    from magicxml_spark.operators.sampling import pack_sequences
+    from magicxml_spark.operators.text import tokens
+
+    sel = dsir_select(df, "doc_id", "text", F.col("doc_id") % 2 == 0, k=100)
+    counts = df.select(
+        "doc_id", F.size(tokens(F.col("text"))).cast("long").alias("n_tokens")
+    )
+    packed = pack_sequences(
+        sel.join(counts, "doc_id"), "doc_id", "n_tokens", seq_len=128
+    )
+    return packed.select(
+        "doc_id",
+        "n_grams",
+        "log_w",
+        "sel_key",
+        "n_tokens",
+        "seq_id",
+        "doc_from",
+        "seg_len",
+        "seq_off",
+    )
 
 
 def _curation_v4_oracle() -> str:
@@ -3124,10 +3165,6 @@ def _curation_v5_oracle() -> str:
         f"' The story of ' || {uid} || "
         "' is clear to all of us and it is a good one to read.'"
     )
-    tok_n = (
-        "len(list_filter(string_split_regex(lower(text), '\\s+'),"
-        " x -> x <> ''))"
-    )
     return f"""
     WITH v5w AS (SELECT doc_id, text, {_WORDS_SQL} AS w FROM documents),
     synthv5 AS MATERIALIZED (
@@ -3158,30 +3195,7 @@ def _curation_v5_oracle() -> str:
     {_c4_span_ctes("gated")},
     cleaned AS MATERIALIZED (SELECT doc_id, array_to_string(kept, ' ') AS text
                 FROM c4_rebuilt),
-    {_dsir_select_ctes("cleaned")},
-    sel AS MATERIALIZED (SELECT doc_id, n_grams, lw, sel FROM dsir_keyed
-            ORDER BY sel DESC, doc_id LIMIT 100),
-    pw AS (SELECT s.doc_id, s.n_grams, s.lw, s.sel,
-                  CAST({tok_n} AS BIGINT) AS n
-           FROM sel s JOIN cleaned c USING (doc_id)),
-    pnz AS (SELECT * FROM pw WHERE n > 0),
-    ppre AS (SELECT doc_id, n_grams, lw, sel, n,
-                    CAST(coalesce(sum(n) OVER (ORDER BY doc_id
-                           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-                         0) AS BIGINT) AS p
-             FROM pnz),
-    pseg AS (SELECT doc_id, n_grams, lw, sel, n, p,
-                    unnest(range(p // 128, (p + n - 1) // 128 + 1)) AS seq_id
-             FROM ppre)
-    SELECT doc_id, n_grams,
-           round(lw / 1e6, 6) AS log_w,
-           round(sel / 1e6, 6) AS sel_key,
-           n AS n_tokens, seq_id,
-           greatest(seq_id * 128 - p, 0) AS doc_from,
-           least(n, (seq_id + 1) * 128 - p)
-             - greatest(seq_id * 128 - p, 0) AS seg_len,
-           greatest(p - seq_id * 128, 0) AS seq_off
-    FROM pseg
+    {_dsir_pack_sql("cleaned")}
     """
 
 
@@ -3249,13 +3263,9 @@ def _v5_synth_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query("q_curation_v5", oracle=_curation_v5_oracle())
 def q_curation_v5(spark: SparkSession, sf_dir: str) -> DataFrame:
     from magicxml_spark.operators.curation import c4_span_dedup, gopher_quality
-    from magicxml_spark.operators.dsir import dsir_select
     from magicxml_spark.operators.extraction import justext_boilerplate
     from magicxml_spark.operators.langid import with_lang
-    from magicxml_spark.operators.sampling import pack_sequences
-    from magicxml_spark.operators.text import tokens
 
-    d = F.col("doc_id")
     synth = _v5_synth_spark(spark, sf_dir).localCheckpoint(eager=True)
     # Stage boundaries MATERIALIZE (localCheckpoint, not persist — the
     # CacheManager bench trap). Without this the composition is one
@@ -3291,16 +3301,8 @@ def q_curation_v5(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", F.col("text_main").alias("text"))
         .localCheckpoint(eager=True)
     )
-    # stage 2: Gopher quality gate — the keep frame materializes
-    # before the filter (the langid gate-shape rule applied to every
-    # expensive column-append gate; r11 probe: 40-48 -> 28-29 s for
-    # the gopher+fineweb pair at sf1)
-    gated = main.join(
-        gate_on_computed(
-            gopher_quality(main), ["doc_id", "keep"], F.col("keep")
-        ).select("doc_id"),
-        "doc_id",
-    )
+    # stage 2: Gopher quality gate
+    gated = _quality_gate(main, gopher_quality)
     # stage 3: corpus-wide 3-sentence-span dedup
     clean = c4_span_dedup(gated).select(
         "doc_id", F.col("text_dedup").alias("text")
@@ -3308,26 +3310,9 @@ def q_curation_v5(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the cleaned corpus feeds THREE consumers (DSIR grams, DSIR id
     # frame, pack token counts)
     clean = clean.localCheckpoint(eager=True)
-    # stage 4: DSIR importance selection toward the even-id target
-    sel = dsir_select(clean, "doc_id", "text", d % 2 == 0, k=100)
-    # stage 5: token-exact 128-token sequence packing of the selection
-    counts = clean.select(
-        "doc_id", F.size(tokens(F.col("text"))).cast("long").alias("n_tokens")
-    )
-    packed = pack_sequences(
-        sel.join(counts, "doc_id"), "doc_id", "n_tokens", seq_len=128
-    )
-    return packed.select(
-        "doc_id",
-        "n_grams",
-        "log_w",
-        "sel_key",
-        "n_tokens",
-        "seq_id",
-        "doc_from",
-        "seg_len",
-        "seq_off",
-    )
+    # stages 4-5: DSIR importance selection toward the even-id target,
+    # then token-exact 128-token sequence packing of the selection
+    return _dsir_pack_stage(clean)
 
 
 # --- BPE trainer (Sennrich et al. 2016 §3.2) ----------------------------------
@@ -4014,6 +3999,48 @@ def _v6_sql_para(cyc: list[str], jcyc: list[str], i0: int) -> str:
     )
 
 
+def _minhash_survivor_ctes(src: str, dst: str) -> str:
+    """MinHash fuzzy dedup of ``src`` (doc_id, text) into ``dst``: the
+    ``mh_``-prefixed signature CTEs, banded candidate pairs, connected
+    components by recursive reachability, and the min-id survivor per
+    cluster (needs ``WITH RECURSIVE``). Shared by the v6 and v8
+    oracles; the Spark twin is :func:`_minhash_survivors`."""
+    return f"""{_minhash_sig_ctes(src, "mh_")},
+    mh_pairs AS (SELECT DISTINCT a.doc_id AS id_a, b2.doc_id AS id_b
+                 FROM mh_sig a JOIN mh_sig b2
+                   ON a.band = b2.band AND a.signature = b2.signature
+                  AND a.doc_id < b2.doc_id),
+    mh_edges AS (SELECT id_a AS src, id_b AS dst FROM mh_pairs
+                 UNION SELECT id_b, id_a FROM mh_pairs),
+    mh_reach(id, r) AS (
+      SELECT doc_id, doc_id FROM {src}
+      UNION
+      SELECT e.dst, rr.r FROM mh_reach rr JOIN mh_edges e ON e.src = rr.id),
+    mh_keep AS (SELECT id AS doc_id FROM mh_reach
+                GROUP BY id HAVING min(r) = id),
+    {dst} AS MATERIALIZED (SELECT g.doc_id, g.text
+               FROM {src} g JOIN mh_keep USING (doc_id))"""
+
+
+def _minhash_survivors(df: DataFrame) -> DataFrame:
+    """Spark twin of :func:`_minhash_survivor_ctes`: MinHash fuzzy
+    dedup (FineWeb §3.4) of ``df`` (doc_id, text) — banded candidate
+    pairs (capped star emission is the production default; cluster
+    membership is identical to uncapped, the documented
+    q_lsh_pairs_capped property) -> connected components -> the min-id
+    doc per cluster. The survivors are materialized: they feed the
+    DSIR grams, the DSIR id frame and the token counts."""
+    from magicxml_spark.analytics.clusters import dedup_clusters
+    from magicxml_spark.operators.dedup import lsh_candidate_pairs
+
+    pairs = lsh_candidate_pairs(df, "doc_id", "text")
+    clusters = dedup_clusters(df.select(F.col("doc_id").alias("id")), pairs)
+    keep_ids = clusters.filter(F.col("id") == F.col("cluster_id")).select(
+        F.col("id").alias("doc_id")
+    )
+    return df.join(keep_ids, "doc_id").localCheckpoint(eager=True)
+
+
 def _curation_v6_oracle() -> str:
     from magicxml_spark.operators.langid import langid_duckdb_ctes
 
@@ -4029,10 +4056,6 @@ def _curation_v6_oracle() -> str:
     listy = (
         "array_to_string(list_transform(range(60, 96), i -> "
         "'we u' || CAST(doc_id * 1009 + i * 131 AS VARCHAR)), chr(10))"
-    )
-    tok_n = (
-        "len(list_filter(string_split_regex(lower(text), '\\s+'),"
-        " x -> x <> ''))"
     )
     return f"""
     WITH RECURSIVE synthv6 AS MATERIALIZED (
@@ -4069,54 +4092,8 @@ def _curation_v6_oracle() -> str:
     fwgated AS MATERIALIZED (SELECT g.doc_id, g.text
                FROM gated6 g JOIN fwfr f USING (doc_id)
                WHERE {fw_keep}),
-    mh_w AS (SELECT doc_id, {_WORDS_SQL} AS w FROM fwgated),
-    mh_sh AS (SELECT doc_id,
-                     list_transform(range(1, greatest(len(w) - 2, 1) + 1),
-                                    i -> array_to_string(w[i:i+2], ' ')) AS sh
-              FROM mh_w WHERE len(w) > 0),
-    mh_sig AS (SELECT doc_id, b.band,
-                      list_aggregate(list_transform(sh,
-                        s -> substr(md5(s), 1 + b.band * 8, 8)),
-                        'min') AS signature
-               FROM mh_sh, (SELECT unnest(range(0, 4)) AS band) b),
-    mh_pairs AS (SELECT DISTINCT a.doc_id AS id_a, b2.doc_id AS id_b
-                 FROM mh_sig a JOIN mh_sig b2
-                   ON a.band = b2.band AND a.signature = b2.signature
-                  AND a.doc_id < b2.doc_id),
-    mh_edges AS (SELECT id_a AS src, id_b AS dst FROM mh_pairs
-                 UNION SELECT id_b, id_a FROM mh_pairs),
-    mh_reach(id, r) AS (
-      SELECT doc_id, doc_id FROM fwgated
-      UNION
-      SELECT e.dst, rr.r FROM mh_reach rr JOIN mh_edges e ON e.src = rr.id),
-    mh_keep AS (SELECT id AS doc_id FROM mh_reach
-                GROUP BY id HAVING min(r) = id),
-    deduped AS MATERIALIZED (SELECT g.doc_id, g.text
-               FROM fwgated g JOIN mh_keep USING (doc_id)),
-    {_dsir_select_ctes("deduped")},
-    sel AS MATERIALIZED (SELECT doc_id, n_grams, lw, sel FROM dsir_keyed
-            ORDER BY sel DESC, doc_id LIMIT 100),
-    pw AS (SELECT s.doc_id, s.n_grams, s.lw, s.sel,
-                  CAST({tok_n} AS BIGINT) AS n
-           FROM sel s JOIN deduped c USING (doc_id)),
-    pnz AS (SELECT * FROM pw WHERE n > 0),
-    ppre AS (SELECT doc_id, n_grams, lw, sel, n,
-                    CAST(coalesce(sum(n) OVER (ORDER BY doc_id
-                           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-                         0) AS BIGINT) AS p
-             FROM pnz),
-    pseg AS (SELECT doc_id, n_grams, lw, sel, n, p,
-                    unnest(range(p // 128, (p + n - 1) // 128 + 1)) AS seq_id
-             FROM ppre)
-    SELECT doc_id, n_grams,
-           round(lw / 1e6, 6) AS log_w,
-           round(sel / 1e6, 6) AS sel_key,
-           n AS n_tokens, seq_id,
-           greatest(seq_id * 128 - p, 0) AS doc_from,
-           least(n, (seq_id + 1) * 128 - p)
-             - greatest(seq_id * 128 - p, 0) AS seg_len,
-           greatest(p - seq_id * 128, 0) AS seq_off
-    FROM pseg
+    {_minhash_survivor_ctes("fwgated", "deduped")},
+    {_dsir_pack_sql("deduped")}
     """
 
 
@@ -4200,16 +4177,10 @@ def _v6_synth_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query("q_curation_v6", oracle=_curation_v6_oracle())
 def q_curation_v6(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from magicxml_spark.analytics.clusters import dedup_clusters
     from magicxml_spark.operators.curation import fineweb_quality, gopher_quality
-    from magicxml_spark.operators.dedup import lsh_candidate_pairs
-    from magicxml_spark.operators.dsir import dsir_select
     from magicxml_spark.operators.extraction import justext_boilerplate
     from magicxml_spark.operators.langid import with_lang
-    from magicxml_spark.operators.sampling import pack_sequences
-    from magicxml_spark.operators.text import tokens
 
-    d = F.col("doc_id")
     synth = _v6_synth_spark(spark, sf_dir).localCheckpoint(eager=True)
     # stage boundaries are compact (id, text) localCheckpoints — the
     # v5 rationale (collapsed-tree re-evaluation, CacheManager trap)
@@ -4231,56 +4202,14 @@ def q_curation_v6(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", F.col("text_main").alias("text"))
         .localCheckpoint(eager=True)
     )
-    # stage 2: Gopher gate — keep frames materialize before their
-    # filters (the langid gate-shape rule; r11 probe 40-48 -> 28-29 s
-    # for this stage pair at sf1)
-    gated = main.join(
-        gate_on_computed(
-            gopher_quality(main), ["doc_id", "keep"], F.col("keep")
-        ).select("doc_id"),
-        "doc_id",
-    )
+    # stage 2: Gopher gate
+    gated = _quality_gate(main, gopher_quality)
     # stage 3: FineWeb custom quality gate (Penedo 2024 §3.6)
     # feeds signatures + the post-dedup rebuild: materialize once
-    fwgated = gated.join(
-        gate_on_computed(
-            fineweb_quality(gated), ["doc_id", "keep"], F.col("keep")
-        ).select("doc_id"),
-        "doc_id",
-    ).localCheckpoint(eager=True)
-    # stage 4: MinHash fuzzy dedup (§3.4) — banded candidate pairs
-    # (capped star emission is the production default; cluster
-    # membership is identical to uncapped, the documented
-    # q_lsh_pairs_capped property) -> connected components -> keep the
-    # min-id doc per cluster
-    pairs = lsh_candidate_pairs(fwgated, "doc_id", "text")
-    clusters = dedup_clusters(
-        fwgated.select(F.col("doc_id").alias("id")), pairs
-    )
-    keep_ids = clusters.filter(F.col("id") == F.col("cluster_id")).select(
-        F.col("id").alias("doc_id")
-    )
-    deduped = fwgated.join(keep_ids, "doc_id").localCheckpoint(eager=True)
-    # stage 5: DSIR selection toward the even-id target
-    sel = dsir_select(deduped, "doc_id", "text", d % 2 == 0, k=100)
-    # stage 6: token-exact 128-token packing
-    counts = deduped.select(
-        "doc_id", F.size(tokens(F.col("text"))).cast("long").alias("n_tokens")
-    )
-    packed = pack_sequences(
-        sel.join(counts, "doc_id"), "doc_id", "n_tokens", seq_len=128
-    )
-    return packed.select(
-        "doc_id",
-        "n_grams",
-        "log_w",
-        "sel_key",
-        "n_tokens",
-        "seq_id",
-        "doc_from",
-        "seg_len",
-        "seq_off",
-    )
+    fwgated = _quality_gate(gated, fineweb_quality).localCheckpoint(eager=True)
+    # stage 4: MinHash fuzzy dedup (§3.4), one survivor per cluster;
+    # stages 5-6: DSIR selection, then token-exact 128-token packing
+    return _dsir_pack_stage(_minhash_survivors(fwgated))
 
 
 # --- Normalize -> exact dedup composition -------------------------------------
@@ -4634,12 +4563,8 @@ def q_curation_v7(spark: SparkSession, sf_dir: str) -> DataFrame:
         synth, snap, keep_lang="en", max_surprisal=_V7_MAX_SURPRISAL
     ).localCheckpoint(eager=True)
     # the v6 gate stack's head over the REASSEMBLED documents
-    kept = gate_on_computed(
-        gopher_quality(cur, text_col="text_kept"),
-        ["doc_id", "keep"],
-        F.col("keep"),
-    ).select("doc_id")
-    return cur.join(kept, "doc_id").select(
+    kept = _quality_gate(cur, lambda c: gopher_quality(c, text_col="text_kept"))
+    return kept.select(
         "doc_id",
         "n_paras",
         "n_kept",
@@ -4964,10 +4889,6 @@ def _curation_v8_oracle() -> str:
         f"' ' || repeat('we do it and ', {_V6_BOMB_REPS})"
         " || 'so it is done now.'"
     )
-    tok_n = (
-        "len(list_filter(string_split_regex(lower(text), '\\s+'),"
-        " x -> x <> ''))"
-    )
     return f"""
     WITH RECURSIVE synthv8 AS MATERIALIZED (
       SELECT doc_id,
@@ -5014,54 +4935,8 @@ def _curation_v8_oracle() -> str:
     fwgated8 AS MATERIALIZED (SELECT g.doc_id, g.text
                FROM g8 g JOIN fwfr f USING (doc_id)
                WHERE {fw_keep}),
-    mh_w AS (SELECT doc_id, {_WORDS_SQL} AS w FROM fwgated8),
-    mh_sh AS (SELECT doc_id,
-                     list_transform(range(1, greatest(len(w) - 2, 1) + 1),
-                                    i -> array_to_string(w[i:i+2], ' ')) AS sh
-              FROM mh_w WHERE len(w) > 0),
-    mh_sig AS (SELECT doc_id, b.band,
-                      list_aggregate(list_transform(sh,
-                        s -> substr(md5(s), 1 + b.band * 8, 8)),
-                        'min') AS signature
-               FROM mh_sh, (SELECT unnest(range(0, 4)) AS band) b),
-    mh_pairs AS (SELECT DISTINCT a.doc_id AS id_a, b2.doc_id AS id_b
-                 FROM mh_sig a JOIN mh_sig b2
-                   ON a.band = b2.band AND a.signature = b2.signature
-                  AND a.doc_id < b2.doc_id),
-    mh_edges AS (SELECT id_a AS src, id_b AS dst FROM mh_pairs
-                 UNION SELECT id_b, id_a FROM mh_pairs),
-    mh_reach(id, r) AS (
-      SELECT doc_id, doc_id FROM fwgated8
-      UNION
-      SELECT e.dst, rr.r FROM mh_reach rr JOIN mh_edges e ON e.src = rr.id),
-    mh_keep AS (SELECT id AS doc_id FROM mh_reach
-                GROUP BY id HAVING min(r) = id),
-    deduped8 AS MATERIALIZED (SELECT g.doc_id, g.text
-               FROM fwgated8 g JOIN mh_keep USING (doc_id)),
-    {_dsir_select_ctes("deduped8")},
-    sel AS MATERIALIZED (SELECT doc_id, n_grams, lw, sel FROM dsir_keyed
-            ORDER BY sel DESC, doc_id LIMIT 100),
-    pw AS (SELECT s.doc_id, s.n_grams, s.lw, s.sel,
-                  CAST({tok_n} AS BIGINT) AS n
-           FROM sel s JOIN deduped8 c USING (doc_id)),
-    pnz AS (SELECT * FROM pw WHERE n > 0),
-    ppre AS (SELECT doc_id, n_grams, lw, sel, n,
-                    CAST(coalesce(sum(n) OVER (ORDER BY doc_id
-                           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-                         0) AS BIGINT) AS p
-             FROM pnz),
-    pseg AS (SELECT doc_id, n_grams, lw, sel, n, p,
-                    unnest(range(p // 128, (p + n - 1) // 128 + 1)) AS seq_id
-             FROM ppre)
-    SELECT doc_id, n_grams,
-           round(lw / 1e6, 6) AS log_w,
-           round(sel / 1e6, 6) AS sel_key,
-           n AS n_tokens, seq_id,
-           greatest(seq_id * 128 - p, 0) AS doc_from,
-           least(n, (seq_id + 1) * 128 - p)
-             - greatest(seq_id * 128 - p, 0) AS seg_len,
-           greatest(p - seq_id * 128, 0) AS seq_off
-    FROM pseg
+    {_minhash_survivor_ctes("fwgated8", "deduped8")},
+    {_dsir_pack_sql("deduped8")}
     """
 
 
@@ -5119,18 +4994,12 @@ def _v8_synth_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query("q_curation_v8", oracle=_curation_v8_oracle())
 def q_curation_v8(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from magicxml_spark.analytics.clusters import dedup_clusters
     from magicxml_spark.operators.curation import (
         fineweb_quality,
         gopher_quality,
         paragraph_curation,
     )
-    from magicxml_spark.operators.dedup import lsh_candidate_pairs
-    from magicxml_spark.operators.dsir import dsir_select
-    from magicxml_spark.operators.sampling import pack_sequences
-    from magicxml_spark.operators.text import tokens
 
-    d = F.col("doc_id")
     synth = _v8_synth_spark(spark, sf_dir).localCheckpoint(eager=True)
     # stage 0: paragraph-granularity score-gated langid curation —
     # langid-only mode (lm_path=None); the LM arm is v7's
@@ -5143,49 +5012,12 @@ def q_curation_v8(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).localCheckpoint(eager=True)
     # stage 1: Gopher gate on the REASSEMBLED documents (empty
     # reassemblies fail n_words and drop here)
-    gated = kept.join(
-        gate_on_computed(
-            gopher_quality(kept), ["doc_id", "keep"], F.col("keep")
-        ).select("doc_id"),
-        "doc_id",
-    )
+    gated = _quality_gate(kept, gopher_quality)
     # stage 2: FineWeb custom filters
-    fwgated = gated.join(
-        gate_on_computed(
-            fineweb_quality(gated), ["doc_id", "keep"], F.col("keep")
-        ).select("doc_id"),
-        "doc_id",
-    ).localCheckpoint(eager=True)
-    # stage 3: MinHash fuzzy dedup (capped star default) -> connected
-    # components -> min-id survivor per cluster
-    pairs = lsh_candidate_pairs(fwgated, "doc_id", "text")
-    clusters = dedup_clusters(
-        fwgated.select(F.col("doc_id").alias("id")), pairs
-    )
-    keep_ids = clusters.filter(F.col("id") == F.col("cluster_id")).select(
-        F.col("id").alias("doc_id")
-    )
-    deduped = fwgated.join(keep_ids, "doc_id").localCheckpoint(eager=True)
-    # stage 4: DSIR selection toward the even-id target
-    sel = dsir_select(deduped, "doc_id", "text", d % 2 == 0, k=100)
-    # stage 5: token-exact 128-token packing
-    counts = deduped.select(
-        "doc_id", F.size(tokens(F.col("text"))).cast("long").alias("n_tokens")
-    )
-    packed = pack_sequences(
-        sel.join(counts, "doc_id"), "doc_id", "n_tokens", seq_len=128
-    )
-    return packed.select(
-        "doc_id",
-        "n_grams",
-        "log_w",
-        "sel_key",
-        "n_tokens",
-        "seq_id",
-        "doc_from",
-        "seg_len",
-        "seq_off",
-    )
+    fwgated = _quality_gate(gated, fineweb_quality).localCheckpoint(eager=True)
+    # stage 3: MinHash fuzzy dedup, one survivor per cluster;
+    # stages 4-5: DSIR selection, then token-exact 128-token packing
+    return _dsir_pack_stage(_minhash_survivors(fwgated))
 
 
 # --- Per-paragraph quality classifier (the third paragraph signal) -----------

@@ -13,6 +13,26 @@ import os
 
 from pyspark.sql import SparkSession
 
+_MAX_DRIVER_MEM_MB = 32 * 1024
+
+
+def _default_driver_memory() -> str:
+    """Half the host's physical memory (``MemTotal``), capped at 32g.
+
+    In local mode the driver heap is the whole cluster's memory, and a
+    heap sized past the host's RAM gets the process OOM-killed instead
+    of spilling. Without ``/proc/meminfo`` (non-Linux hosts) the cap
+    applies."""
+    try:
+        with open("/proc/meminfo") as fh:
+            for line in fh:
+                if line.startswith("MemTotal:"):
+                    half_mb = int(line.split()[1]) // 2048  # kB -> MB, halved
+                    return f"{min(half_mb, _MAX_DRIVER_MEM_MB)}m"
+    except OSError:
+        pass
+    return f"{_MAX_DRIVER_MEM_MB}m"
+
 
 def get_spark(
     app_name: str = "magicxml-spark",
@@ -50,7 +70,10 @@ def get_spark(
         # testdata events.parquet stores TIMESTAMP(NANOS); Spark has no
         # nanos timestamp type — read as long, converted in tables.table()
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM", _default_driver_memory()),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )

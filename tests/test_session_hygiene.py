@@ -4,6 +4,8 @@ DataFrame's lifetime — session.py documents the evidence)."""
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import functions as F
 
 from magicxml_spark.session import release_persisted_rdds
@@ -37,3 +39,20 @@ def test_rebuild_after_sweep_recomputes_from_source(spark):
     assert ck2.count() == 100
     assert ck2.agg(F.sum("v")).collect()[0][0] == 5050
     release_persisted_rdds(spark)
+
+
+def test_default_driver_heap_fits_host_memory(spark):
+    """The driver heap default must fit the host: a 32g default on a
+    smaller box lets the local-mode JVM grow past physical RAM and get
+    OOM-killed. SPARK_GRAFT_DRIVER_MEM, when set, is taken verbatim."""
+    conf = spark.sparkContext.getConf().get("spark.driver.memory")
+    override = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if override is not None:
+        assert conf == override
+        return
+    with open("/proc/meminfo") as fh:
+        mem_total_kb = next(
+            int(line.split()[1]) for line in fh if line.startswith("MemTotal:")
+        )
+    to_bytes = spark.sparkContext._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes
+    assert to_bytes(conf) <= mem_total_kb * 1024
